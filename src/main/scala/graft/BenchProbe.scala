@@ -12,9 +12,9 @@ package graft
   * triggerExecution, and Bench emits them per entry on the
   * `probe_times` detail line (the `shuffle_bytes`-line pattern).
   *
-  * Recording is GATED on an active entry name (set only by Bench):
-  * library callers, Verify, and the test suites pay one volatile read
-  * per iteration and allocate nothing.
+  * Recording is GATED on an active entry name (set only by
+  * [[Harness.runEntry]]): library callers and the test suites pay one
+  * volatile read per iteration and allocate nothing.
   */
 object BenchProbe {
   @volatile private var current: String = null
@@ -68,9 +68,9 @@ object BenchProbe {
   * those dirs (parquet indexes, state stores, checkpoints) accumulate
   * as disk + state-store pressure and were a prime suspect in the
   * round-18 builder-side 1.4-1.7× drift on the iterative/index family.
-  * Entries route creation through [[create]] so the harnesses
-  * (Bench/Verify) can delete everything an entry left behind right
-  * after consuming its result — the filesystem analog of
+  * Entries route creation through [[create]] so [[Harness.runEntry]]
+  * can delete everything an entry left behind right after consuming
+  * its result — the filesystem analog of
   * `Materialize.releaseAll`.
   *
   * Library/test callers that never call [[cleanAll]] keep the exact

@@ -1,37 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev harness: time (and optionally explain) individual queries.
+/** Dev harness: print the formatted physical plan of the named entries
+  * (matched as name prefixes). Timing is Bench's job and output dumps
+  * are Verify's; both take SPARK_GRAFT_ONLY for the same selection.
   * Usage: runMain graft.Dev q25_minhash_lsh q26_simhash
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.01), GRAFT_EXPLAIN=1 to dump the
-  * formatted physical plan before running.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS.
   */
 object Dev {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    args.foreach { name =>
-      val df = SparkEntry.queries.getOrElse(name,
-        SparkEntry.benchOnly(name))(spark, sfDir)
-      if (sys.env.contains("GRAFT_EXPLAIN")) df.explain("formatted")
-      val t0 = System.nanoTime()
-      val n = sys.env.get("GRAFT_DUMP") match {
-        case Some(dir) =>
-          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
-          spark.read.parquet(s"$dir/$name").count()
-        case None => df.count()
+    val spark = Harness.session()
+    val registry = SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq
+    Harness.entries(registry, Some(args.toSeq))
+      .foreach { case (name, fn) =>
+        println(s"[dev] $name")
+        Harness.runEntry(spark, sfDir, name, fn)(_.explain("formatted"))
+          .fold(err => println(s"[dev] $name: $err"), _ => ())
       }
-      println(f"[dev] $name: $n rows, ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
     spark.stop()
   }
 }

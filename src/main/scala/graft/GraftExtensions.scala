@@ -19,11 +19,11 @@ import graft.functions.ColumnPlugins
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // let-binding codegen rewrite (guide §4): turn the bound() idiom's
-    // interpreted single-element-transform into Catalyst's
-    // With/common-expression form once everything is resolved — runs
-    // in the operator-optimization batch, BEFORE the optimizer's
-    // mandatory RewriteWithExpression hoists the definitions
+    // let-binding codegen rewrite (guide §4): once everything is
+    // resolved, hoist the bound() idiom's interpreted single-element-
+    // transform into a projection below its operator (an alias the
+    // lambda variable then references) — runs in the operator-
+    // optimization batch
     ext.injectOptimizerRule(_ => graft.expressions.RewriteBoundLambda)
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),

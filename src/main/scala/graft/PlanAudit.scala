@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Suite-wide interpreted-expression inventory (optimization-guide §4 /
   * task rule 4): run every declared query and, via a
@@ -11,7 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
   * every expression that mixes in `CodegenFallback`, i.e. runs
   * interpreted per row inside otherwise-codegen stages. Output: one
   * line per query (`name: expr[,expr…]` or `-`), committable as the
-  * round's codegen evidence.
+  * round's codegen evidence. The set is read after
+  * [[Harness.runEntry]] has drained the listener bus, so every line
+  * holds exactly its own entry's plans.
   *
   * Cost: about one Verify pass (every entry executes).
   *
@@ -19,67 +22,47 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
   * SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY as in Bench).
   */
 object PlanAudit {
+  /** Collects the pretty names of the `CodegenFallback` expressions in
+    * every plan the session executes, until [[take]].
+    */
+  final class Fallbacks extends QueryExecutionListener {
+    private val falls =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+    /** The names collected so far, sorted; clears the set. */
+    def take(): Seq[String] = {
+      val fs = falls.toArray(Array.empty[String]).toSeq.sorted
+      fs.foreach(falls.remove)
+      fs
+    }
+
+    private def walk(qe: QueryExecution): Unit =
+      try qe.executedPlan.foreach { node =>
+        node.expressions.foreach(_.foreach {
+          case e: CodegenFallback => falls.add(e.prettyName)
+          case _ => ()
+        })
+      } catch { case e: Throwable =>
+        System.err.println(s"[audit] plan walk failed: $e")
+      }
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      walk(qe)
+    override def onFailure(f: String, qe: QueryExecution,
+                           e: Exception): Unit = walk(qe)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val falls =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private def walk(
-            qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          try qe.executedPlan.foreach { node =>
-            node.expressions.foreach(_.foreach {
-              case e: CodegenFallback => falls.add(e.prettyName)
-              case _ => ()
-            })
-          } catch { case _: Throwable => () }
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            ns: Long): Unit = walk(qe)
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = walk(qe)
-      }
-    spark.listenerManager.register(listener)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    (SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq)
-      .sortBy(_._1)
-      .filter(p => only.forall(_.exists(p._1.startsWith)))
+    val spark = Harness.session()
+    val fallbacks = new Fallbacks
+    spark.listenerManager.register(fallbacks)
+    Harness.entries(SparkEntry.queries.toSeq ++ SparkEntry.benchOnly.toSeq)
       .foreach { case (name, fn) =>
-        falls.clear()
-        try {
-          fn(spark, sfDir).count()
-          // the listener bus delivers asynchronously — let in-flight
-          // events land before reading the set
-          Thread.sleep(300)
-          val fs = new java.util.TreeSet[String](falls)
-          println(s"[audit] $name: " +
-            (if (fs.isEmpty) "-"
-             else {
-               val it = scala.jdk.CollectionConverters
-                 .IterableHasAsScala(fs).asScala
-               it.mkString(",")
-             }))
-        } catch {
-          case e: Throwable =>
-            println(s"[audit] $name: ERROR ${e.getClass.getSimpleName}")
-        } finally {
-          try graft.operators.Materialize.releaseAll(spark)
-          catch { case _: Throwable => () }
-          try TempDirs.cleanAll() catch { case _: Throwable => () }
-        }
+        val out = Harness.runEntry(spark, sfDir, name, fn)(_.count())
+        val fs = fallbacks.take()
+        println(s"[audit] $name: " + out.fold(err => s"ERROR $err",
+          _ => if (fs.isEmpty) "-" else fs.mkString(",")))
       }
     spark.stop()
   }

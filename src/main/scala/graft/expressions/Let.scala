@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.IntegerType
 /** Rewrite the engine's let-binding idiom so bound kernel bodies keep
   * whole-stage codegen (guide §4 / task rule 4).
   *
-  * `Vectors.bound` / `Dedup.bound` pin a value that is referenced more
-  * than once as `element_at(transform(array(value), body), 1)` — the
+  * `Vectors.bound` pins a value that is referenced more than once as
+  * `element_at(transform(array(value), body), 1)` — the
   * one PRE-ANALYSIS construct that can carry a let (Catalyst inlines
   * projected subexpressions into every use site, and a `With` cannot
   * be built before resolution because `CommonExpressionRef` snapshots
@@ -30,8 +30,11 @@ import org.apache.spark.sql.types.IntegerType
   * `With`/RewriteWithExpression machinery was tried first and declines
   * exactly the hot cases: refs inside lambda bodies and Generate
   * operators survive to execution as Unevaluable — measured, round
-  * 22.) CollapseProject cannot undo the hoist: the alias is non-cheap
-  * and referenced more than once.
+  * 22.) CollapseProject keeps the hoist when the alias is referenced
+  * more than once, but NOT for a value referenced exactly once, inside
+  * a lambda: it re-inlines the alias there, so
+  * `bound(split(t, " "))(w => transform(xs, x => x + size(w)))` ends
+  * up evaluating the split once per array element again.
   *
   * Deliberately left on the interpreted path (status quo, correct):
   *  - patterns inside another HOF's lambda body (the hoisted value

@@ -21,12 +21,13 @@ object Vectors {
     * sees (lambda-binding is the one pre-analysis construct that can
     * carry a let); it is CodegenFallback, so left as-is every bound
     * kernel body would run interpreted. The injected optimizer rule
-    * [[graft.expressions.RewriteBoundLambda]] rewrites the resolved
-    * pattern into Catalyst's `With`/common-expression form (the
-    * machinery Spark's own runtime replacements use), which the
-    * mandatory RewriteWithExpression rule then hoists into a
-    * projection — single evaluation AND whole-stage codegen (guide
-    * §4 / PlanAudit evidence, round 22).
+    * [[graft.expressions.RewriteBoundLambda]] hoists the resolved
+    * pattern directly: `value` becomes an alias in a projection
+    * inserted below the consuming operator, and the lambda variable
+    * becomes that attribute — single evaluation AND whole-stage codegen
+    * (guide §4 / PlanAudit evidence, round 22). The rule's scaladoc
+    * lists the sites it leaves interpreted, and the one case the
+    * optimizer re-inlines: a value referenced once, inside a lambda.
     */
   def bound(value: Column)(body: Column => Column): Column =
     element_at(transform(array(value), body), 1)

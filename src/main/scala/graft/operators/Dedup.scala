@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Vectors.bound
 
 /** Deduplication family for large-scale corpus curation: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, n-gram Jaccard.
@@ -56,13 +57,6 @@ object Dedup {
       (1L + rnd.nextInt((1 << 29) - 1).toLong, rnd.nextInt(1 << 29).toLong)
     }
   }
-
-  /** Let-binding for column expressions — see
-    * [[graft.functions.Vectors.bound]] (shared definition); re-exported
-    * here because every dedup kernel needs it.
-    */
-  private[operators] def bound(value: Column)(body: Column => Column): Column =
-    graft.functions.Vectors.bound(value)(body)
 
   /** Word 3-shingles (distinct), lowercased. The word array is bound
     * once; without the binding the split+filter re-runs for every

@@ -414,6 +414,12 @@ object Graph {
     * without degrees' second scan+dedup of the edge relation. Returns
     * `(node, rank, out_deg, in_deg)`; values are exactly
     * `pageRank(...).join(degrees(...), "node")`.
+    *
+    * Retention differs from [[pageRank]], which releases its edge frame
+    * and universe before returning: here the returned frame reads all
+    * three, so the edge frame, the universe and the final ranks stay
+    * persisted until `Materialize.releaseAll` (or until the caller
+    * drops the result and GC clears the registry's weak references).
     */
   def pageRankWithDegrees(edges: DataFrame, nodes: DataFrame,
                           srcCol: String, dstCol: String,

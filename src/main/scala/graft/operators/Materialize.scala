@@ -39,7 +39,7 @@ object Materialize {
   // checkpointed frames of eviction pressure. The registry makes the
   // frames releasable deterministically: operators release their own
   // intermediates per round via [[release]], and harnesses
-  // (Bench/Verify, or a spec) drop the FINAL returned frames after
+  // (Harness.runEntry, or a spec) drop the FINAL returned frames after
   // consuming them via [[releaseAll]].
   //
   // WEAK references: a library caller of Graph.pageRank/hits/
@@ -89,7 +89,7 @@ object Materialize {
   }
 
   /** Release every still-tracked [[iterCut]] frame of `spark`'s
-    * context — the post-consume hook Bench/Verify call after each
+    * context — the post-consume hook Harness.runEntry calls after each
     * query so one query's final iterative frames never ride as
     * eviction pressure into the next (assertable:
     * `sparkContext.getPersistentRDDs` returns to its pre-query size).

@@ -918,7 +918,7 @@ object Similarity {
         .as("s")))
     // bind the hashed pairs once — referenced dim× below, and Catalyst
     // would otherwise re-hash every token per output dimension
-    val raw = Dedup.bound(pairs) { pv =>
+    val raw = Vectors.bound(pairs) { pv =>
       array((0 until dim).map { i =>
         aggregate(filter(pv, p => p.getField("idx") === i),
           lit(0.0), (acc, p) => acc + p.getField("s"))
